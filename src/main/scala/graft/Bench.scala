@@ -1,80 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // r21: the suite compiles ~4 generated classes per query × 369
-      // queries; the default 100-entry codegen cache evicts everything
-      // long before the deferred retry passes re-run a query, so every
-      // retry recompiled from scratch. Scale-independent (bounded class
-      // cache, a few MB) — not a local-mode tune.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.Portable.silenceKRowWindowWarnings()
-    // Untimed warmup: absorb one-time JVM/codegen/scan-setup cost so it
-    // isn't charged to whichever query happens to run first (VERDICT r2:
-    // a ~6 s cold-start polluted q_histogram). The flagship agg plus one
-    // window query touch the scan, hash-agg, window, and sort codegen
-    // paths shared by the rest of the suite. The artifact-backed queries
-    // (bucketed layout, z-order layout, IVF/PQ models) also run once
-    // untimed: their one-time producer write/train is the artifact
-    // lifecycle's ingest-side cost (a fresh round starts with an empty
-    // warehouse — r7 found q_join_bucketed charged 18 s for the rebuild),
-    // while the timed pass below measures the steady state every
-    // subsequent consumer actually sees.
-    // (q_pq_topk / q_ivfpq_* warm the PqCodeStore code-table artifacts —
-    // the encode-at-ingest cost of the r17 lifecycle, paid once here.)
-    Seq("q_groupby_agg", "q_row_number",
-        "q_join_bucketed", "q_zorder_scan", "q_ivf_topk", "q_pq_topk",
-        "q_ivfpq_topk", "q_ivfpq_res_topk").foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
-    // Shingle-table artifact (r8): produced once here (ingest-side cost,
-    // same lifecycle as the bucketed/z-order/IVF artifacts above) so the
-    // timed q_jaccard_prefix / q_ngram_jaccard* / q_contamination measure
-    // the steady state every consumer of the persisted table sees.
-    // A failed warm-up is NOT silent (ADVICE r11 item 3): the build cost
-    // would shift into the first timed consumer with no signal, so the
-    // suppressed exception goes to stderr for bench adjudication.
-    def warmArtifact(what: String)(build: => Long): Unit =
-      try build
-      catch { case t: Throwable =>
-        System.err.println(s"[bench] $what artifact warm-up FAILED " +
-          s"(cost shifts into the first timed consumer): $t")
+    val spark = Harness.session()
+    // Untimed warm-up (Harness.warm): the first timed query must not pay
+    // the one-time JVM/codegen cost, and the artifact-backed queries
+    // must see their persisted artifacts (a fresh round starts with an
+    // empty warehouse — r7 found the bucketed join charged 18 s for the
+    // layout rebuild). The timed pass below measures the steady state
+    // every subsequent consumer actually sees.
+    val warmupFailed = Harness.warm(spark, sfDir)
+    val steal0 = Harness.stealTicks()
+    // Queries that threw (NonFatal) in any timed run: kept out of the
+    // total, the per-query map and the retry queue, listed in "failed".
+    val failed = collection.mutable.SortedSet.empty[String]
+    // One timed execution of a query; None when it threw.
+    def once(name: String): Option[Double] =
+      Harness.timed(SparkEntry.queries(name)(spark, sfDir).count()) match {
+        case Right(sec) => Some(sec)
+        case Left(t) =>
+          System.err.println(s"[bench] $name FAILED: $t")
+          failed += name
+          None
       }
-    warmArtifact("shingle")(graft.sources.ShingleStore.ensureShingles(spark, sfDir, 3).count())
-    warmArtifact("token")(graft.sources.TokenStore.ensureTokens(spark, sfDir).count())
-    // Pair-support + item-count artifacts (r11/r12): same lifecycle for
-    // the market-basket tables feeding q_cooccur, the q_triangles edge
-    // set, and q_assoc_rules.
-    warmArtifact("pair")(graft.sources.PairStore.ensurePairs(spark, sfDir).count())
-    warmArtifact("item-count")(graft.sources.PairStore.ensureItems(spark, sfDir).count())
-    warmArtifact("basket")(graft.sources.PairStore.ensureBaskets(spark, sfDir).count())
-    warmArtifact("bt-wins")(graft.sources.PairStore.ensureBtWins(spark, sfDir).count())
-    // Second-moment artifact (r19): one corpus fan at ingest; the five
-    // representation audits then read kilobytes.
-    warmArtifact("moments")(graft.sources.MomentStore.ensure(spark, sfDir).cells.count())
-    // Steal ticks (field 8 of /proc/stat "cpu": USER_HZ=100) — direct
-    // evidence for noise-vs-regression adjudication that loadavg only
-    // proxies: nonzero steal_sec means the host took CPU mid-run.
-    def stealTicks(): Long =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
-        .linesIterator.next().trim.split("\\s+")(8).toLong
-      catch { case _: Throwable => -1L }
-    val steal0 = stealTicks()
-    // One timed execution of a query.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // This container is a microVM on a shared host with BURSTY CPU steal:
     // r7 measured the same suite twice back-to-back at 526 s and 549 s
     // with DISJOINT sets of 20-50× "regressions" (q_correlated_avg 117 s
@@ -109,46 +58,35 @@ object Bench {
     // Both proportional triggers only fire when the committed artifact
     // was recorded at the SAME sf dir (ADVICE r9): per-query times at a
     // different scale factor would mis-trigger every query or none.
-    val (prevQueries, prevSf): (Map[String, Double], Option[String]) =
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_LAST.json"))
-        // the flat-shape scan only works against the exact shape this
-        // writer emits — a parse miss must be VISIBLE (ADVICE r17 item 4:
-        // silent failure disables the retry triggers and drift detection)
-        val at = txt.indexOf("\"queries\":{")
-        if (at < 0) System.err.println(
-          "[bench] WARNING: no \"queries\" block in BENCH_LAST.json — " +
-            "proportional retry triggers and deltas are DISABLED this run")
-        val qBlock = txt.substring(at + 11)
-        val qs = """"([A-Za-z0-9_]+)":([0-9.]+)""".r.findAllMatchIn(qBlock.takeWhile(_ != '}'))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        if (at >= 0 && qs.isEmpty) System.err.println(
-          "[bench] WARNING: \"queries\" block in BENCH_LAST.json parsed EMPTY — " +
-            "shape drift? retry triggers and deltas are DISABLED this run")
-        (qs, """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1)))
-      } catch { case _: Throwable => (Map.empty, None) }
+    val prevTxt =
+      try java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_LAST.json"))
+      catch { case NonFatal(_) => "" }
+    val prevQueries = prevBlock(prevTxt, "queries",
+      "proportional retry triggers and deltas are DISABLED this run")
+    val prevSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(prevTxt).map(_.group(1))
     val sfComparable = prevSf.contains(sfDir)
     def needsRetry(name: String, sec: Double): Boolean =
       sec > 2.5 || (sfComparable && prevQueries.get(name).exists { p =>
         val factor = if (sec >= 1.0) 1.5 else if (sec >= 0.3) 2.0 else 3.0
         p > 0 && sec > factor * p
       })
-    val firstPass = SparkEntry.queries.map { case (name, fn) => name -> once(name, fn) }
-    val results = collection.mutable.Map[String, Double](firstPass.toSeq: _*)
+    val results = collection.mutable.Map[String, Double]()
+    SparkEntry.queries.keys.foreach(name => once(name).foreach(results(name) = _))
     val retrySteal = collection.mutable.ArrayBuffer[Double]()
     for (pass <- 1 to 2) {
       val queue = results.filter { case (n, s) => needsRetry(n, s) }.keys.toSeq.sorted
       if (queue.nonEmpty) {
-        val s0 = stealTicks()
+        val s0 = Harness.stealTicks()
         queue.foreach { name =>
-          results(name) = math.min(results(name), once(name, SparkEntry.queries(name)))
+          once(name) match {
+            case Some(sec) => results(name) = math.min(results(name), sec)
+            case None => results -= name
+          }
         }
-        val s1 = stealTicks()
-        retrySteal += (if (s0 >= 0 && s1 >= 0) math.rint((s1 - s0) / 100.0 * 100) / 100 else -1.0)
+        retrySteal += Harness.stealSince(s0)
       }
     }
-    val stealSec = { val s1 = stealTicks()
-      if (steal0 >= 0 && s1 >= 0) math.rint((s1 - steal0) / 100.0 * 100) / 100 else -1.0 }
+    val stealSec = Harness.stealSince(steal0)
     // Regression gate (VERDICT r6 item 4): diff this run against the
     // previous BENCH_LAST.json (committed each round; parsed above for
     // the proportional retry trigger) so a per-query blow-up is visible
@@ -205,26 +143,8 @@ object Bench {
     // without running the test suite. Untimed (after all timed passes);
     // collect() settles AQE's final stages. Drift vs the previous
     // committed artifact goes to stderr for bench adjudication.
-    val prevShuffles: Map[String, Int] =
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_LAST.json"))
-        val at = txt.indexOf("\"shuffles\":{")
-        if (at < 0) {
-          // pre-r17 artifact had no shuffle block; on anything newer this
-          // means shape drift — either way drift detection is off, say so
-          System.err.println("[bench] WARNING: no \"shuffles\" block in " +
-            "BENCH_LAST.json — plan-drift detection is DISABLED this run")
-          Map.empty
-        } else {
-          val block = txt.substring(at + 12)
-          val m = """"([A-Za-z0-9_]+)":(-?[0-9]+)""".r.findAllMatchIn(block.takeWhile(_ != '}'))
-            .map(m => m.group(1) -> m.group(2).toInt).toMap
-          if (m.isEmpty) System.err.println(
-            "[bench] WARNING: \"shuffles\" block in BENCH_LAST.json parsed EMPTY — " +
-              "shape drift? plan-drift detection is DISABLED this run")
-          m
-        }
-      } catch { case _: Throwable => Map.empty }
+    val prevShuffles = prevBlock(prevTxt, "shuffles",
+      "plan-drift detection is DISABLED this run").map { case (k, v) => k -> v.toInt }
     // Audited set = the headline queries PLUS the full ≥ 1.5 s tail of
     // THIS run (VERDICT r17 item 5): the tail is exactly the set the
     // self-updating PlanInvariantsSpec contract covers, so the emitted
@@ -238,7 +158,7 @@ object Bench {
         val df = SparkEntry.queries(name)(spark, sfDir)
         df.collect()
         graft.plans.PlanAudit.nonRangeShuffles(df)
-      } catch { case _: Throwable => -1 }
+      } catch { case NonFatal(_) => -1 }
       prevShuffles.get(name).filter(_ != n).foreach { p =>
         System.err.println(s"[bench] PLAN DRIFT $name: non-range shuffles $p -> $n")
       }
@@ -247,6 +167,8 @@ object Bench {
     val shufflesJson = shuffles
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val retryStealJson = retrySteal.mkString("[", ",", "]")
+    def names(ns: Iterable[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failures = s""""failed":${names(failed)},"warmup_failed":${names(warmupFailed)}"""
     // Storm-window hygiene (VERDICT r19 item 6): r19's driver run landed
     // inside a 76.2 s steal storm at median_ratio 1.29 and OVERWROTE the
     // committed clean BENCH_LAST.json (199.4 s / steal 9.2 s /
@@ -258,10 +180,10 @@ object Bench {
     val artifact = if (storm) "BENCH_DIRTY.json" else "BENCH_LAST.json"
     // VERDICT r20 item 7: see modeAdjusted's scaladoc
     val adjusted = modeAdjusted(total, medianRatio)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","value_mode_adjusted":$adjusted,"loadavg":$loadavg,"steal_sec":$stealSec,"median_ratio":$medianRatio,"storm":$storm,"retry_pass_steal":$retryStealJson,"queries":${fmt(results)},"deltas":$deltasJson,"shuffles":$shufflesJson,"sf":"$sfDir"}"""
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","value_mode_adjusted":$adjusted,"loadavg":$loadavg,"steal_sec":$stealSec,"median_ratio":$medianRatio,"storm":$storm,"retry_pass_steal":$retryStealJson,"queries":${fmt(headline.flatMap(k => results.get(k).map(k -> _)))},"top_deltas":$deltasJson,"shuffles":$shufflesJson,"n_queries":${results.size},"detail":"$artifact","sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","value_mode_adjusted":$adjusted,"loadavg":$loadavg,"steal_sec":$stealSec,"median_ratio":$medianRatio,"storm":$storm,"retry_pass_steal":$retryStealJson,"queries":${fmt(results)},"deltas":$deltasJson,"shuffles":$shufflesJson,$failures,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","value_mode_adjusted":$adjusted,"loadavg":$loadavg,"steal_sec":$stealSec,"median_ratio":$medianRatio,"storm":$storm,"retry_pass_steal":$retryStealJson,"queries":${fmt(headline.flatMap(k => results.get(k).map(k -> _)))},"top_deltas":$deltasJson,"shuffles":$shufflesJson,$failures,"n_queries":${results.size},"detail":"$artifact","sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), full + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     if (storm) System.err.println(
       s"[bench] STORM WINDOW (steal_sec=$stealSec, median_ratio=$medianRatio): " +
         "full artifact written to BENCH_DIRTY.json; BENCH_LAST.json untouched. " +
@@ -270,6 +192,7 @@ object Bench {
         "promote manually: cp BENCH_DIRTY.json BENCH_LAST.json")
     spark.stop()
     println(compact)
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** Is this run a contention storm whose numbers must not replace the
@@ -280,7 +203,7 @@ object Bench {
     * "main-pass steal 21–117 s" (r19) or an "84 s steal storm" at
     * median_ratio ≥ 1.29 (r18/r19 driver captures). 15 s / 1.15 split
     * those populations with margin on both sides. The -1 sentinels
-    * (unreadable /proc/stat; no same-sf history) must NOT trip the
+    * (unreadable steal counter; no same-sf history) must NOT trip the
     * guard — a first run at a new scale factor is not a storm.
     */
   private[graft] def isStormWindow(stealSec: Double, medianRatio: Double): Boolean =
@@ -300,4 +223,23 @@ object Bench {
     */
   private[graft] def modeAdjusted(total: Double, medianRatio: Double): Double =
     if (medianRatio > 0) math.rint(total / medianRatio * 1000) / 1000 else -1.0
+
+  /** One flat `"name":number` block of the previous BENCH_LAST.json
+    * (`"queries"` or `"shuffles"`). The scan only works against the exact
+    * shape this writer emits, so a miss must be VISIBLE (ADVICE r17
+    * item 4): it silently switches off what `disabled` names. An absent
+    * file (first run) is not a miss.
+    */
+  private def prevBlock(txt: String, key: String, disabled: String): Map[String, Double] = {
+    val at = txt.indexOf("\"" + key + "\":{")
+    val block =
+      if (at < 0) Map.empty[String, Double]
+      else """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r
+        .findAllMatchIn(txt.substring(at + key.length + 4).takeWhile(_ != '}'))
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    if (txt.nonEmpty && block.isEmpty) System.err.println(
+      s"[bench] WARNING: \"$key\" block in BENCH_LAST.json " +
+        s"${if (at < 0) "missing" else "parsed EMPTY — shape drift?"} — $disabled")
+    block
+  }
 }

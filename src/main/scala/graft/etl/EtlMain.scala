@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable entry point for the two reference pipelines — the analog of
   * the reference's `main()` (/root/reference/dags/spark/etl.py:178-186)
   * with local paths instead of the S3/EMR control plane.
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object EtlMain {
   def main(args: Array[String]): Unit = {
     val Array(xetraCsv, eurexCsv, dimCsv, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     XetraPipeline.run(spark, xetraCsv, outDir)
     EurexPipeline.run(spark, eurexCsv, dimCsv, outDir)
     spark.stop()

@@ -807,7 +807,7 @@ object Graph {
       .crossJoin(broadcast(ksDf))
       .where(least(col("_da"), col("_db")) > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_edges"))
-    broadcast(ksDf)
+    ksDf
       .join(nk, Seq("k"), "left")
       .join(ek, Seq("k"), "left")
       .select(col("k"),

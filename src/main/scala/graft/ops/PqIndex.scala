@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 /** Train-once / load-at-query-time lifecycle for the product-quantization
   * codebooks — the same artifact discipline as IvfIndex: the model is
   * m·k·subDim floats (4 KB at m=4, k=16, d=16), trained offline once
-  * (graft.tools.BuildIndex) and loaded by every query. The file stores the
+  * (`graft.tools.Inspect warm`) and loaded by every query. The file stores the
   * m codebooks as m consecutive blocks of k comma-separated float rows;
   * Float.toString/parseFloat round-trips exactly, so a load is
   * bit-identical to the training output.

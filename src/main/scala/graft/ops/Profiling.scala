@@ -3429,10 +3429,13 @@ object Profiling {
     def abFrame(m: Map[String, (Double, Double)]): DataFrame =
       m.toSeq.sortBy(_._1).map { case (g, (a, b)) => (g, a, b) }
         .toDF("_g", "_a", "_b")
-    def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue + 0.0d
-    def round7(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(7, java.math.RoundingMode.HALF_UP).doubleValue + 0.0d
+    // NaN and ±Inf pass through unchanged, as Spark's round does
+    def roundTo(scale: Int)(x: Double): Double =
+      if (!java.lang.Double.isFinite(x)) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue + 0.0d
+    def round6(x: Double): Double = roundTo(6)(x)
+    def round7(x: Double): Double = roundTo(7)(x)
     for (_ <- 0 until iters) {
       ab = ab ++ byG.flatMap { case (g, rs) =>
         val (a, b) = ab(g)

@@ -165,6 +165,11 @@ class Round20OpsSpec extends SparkSpec {
     val iso = Profiling.isotonicCalibration(df, "grp", col("score"),
       col("y") === 1).head().getDouble(5)
     assert(after >= iso, s"platt ECE $after >= isotonic ECE $iso in-sample")
+    // a NaN score passes through the collected-catalog Newton loop the
+    // way Spark's round() does, and leaves the finite group's row unchanged
+    val withNaN = df.union(Seq(("h", Double.NaN, 1L)).toDF("grp", "score", "y"))
+    assert(Profiling.plattScaling(withNaN, "grp", col("score"), col("y") === 1)
+      .where(col("grp") === "g").head() === out)
   }
 
   test("plattScaling: ridge keeps a separable group's parameters bounded") {
