@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** The one session, artifact warm-up, steal probe and timer shared by
@@ -56,13 +56,22 @@ object Harness {
     "bt-wins" -> ((s, d) => graft.sources.PairStore.ensureBtWins(s, d).count()),
     "moments" -> ((s, d) => graft.sources.MomentStore.ensure(s, d).cells.count()))
 
-  /** Runs the whole warm-up list against `sfDir` and returns the names
-    * that failed. A failure is not silent (ADVICE r11 item 3): its build
-    * cost shifts into the first timed consumer, so it goes to stderr and
-    * to the caller.
+  /** A warm-up step that executes the query (`count()`), not just builds
+    * its DataFrame: only execution pays the codegen/JIT cost.
     */
-  def warm(spark: SparkSession, sfDir: String): Seq[String] = {
-    val steps = warmupQueries.map(n => n -> SparkEntry.queries(n)) ++ warmupArtifacts
+  def queryStep(build: (SparkSession, String) => DataFrame): (SparkSession, String) => Long =
+    (s, d) => build(s, d).count()
+
+  val warmupSteps: Seq[(String, (SparkSession, String) => Long)] =
+    warmupQueries.map(n => n -> queryStep((s, d) => SparkEntry.queries(n)(s, d))) ++ warmupArtifacts
+
+  /** Runs `steps` (default: the whole warm-up list) against `sfDir` and
+    * returns the names that failed. A failure is not silent (ADVICE r11
+    * item 3): its build cost shifts into the first timed consumer, so it
+    * goes to stderr and to the caller.
+    */
+  def warm(spark: SparkSession, sfDir: String,
+           steps: Seq[(String, (SparkSession, String) => Long)] = warmupSteps): Seq[String] =
     steps.flatMap { case (name, build) =>
       timed(build(spark, sfDir)).left.toOption.map { t =>
         System.err.println(s"[harness] warm-up $name FAILED " +
@@ -70,7 +79,6 @@ object Harness {
         name
       }
     }
-  }
 
   /** Host CPU steal ticks (field 8 of the kernel's aggregate "cpu" stat
     * line, USER_HZ=100); -1 when unreadable. Nonzero steal over a run means
@@ -89,9 +97,11 @@ object Harness {
 
   /** Wall seconds of `body`, or the non-fatal exception it threw: a
     * failed run never reads as a (fast) timing. Fatal throwables
-    * (OutOfMemoryError, InterruptedException, …) propagate.
+    * (OutOfMemoryError, InterruptedException, …) propagate. `body`
+    * returns an action's row count, so an unexecuted DataFrame cannot
+    * be timed.
     */
-  def timed(body: => Any): Either[Throwable, Double] = {
+  def timed(body: => Long): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
     try { body; Right((System.nanoTime() - t0) / 1e9) }
     catch { case NonFatal(t) => Left(t) }

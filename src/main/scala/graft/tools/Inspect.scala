@@ -27,7 +27,9 @@ import scala.util.control.NonFatal
   *    (pre-execution), the post-execution adaptive plan (final join
   *    strategies, AQEShuffleRead coalescing, ReusedExchange) and the
   *    non-range shuffle count the bench audit records; written to
-  *    `<outDir>/<query>_<suffix>.txt` when given, else to stdout.
+  *    `<outDir>/<query>_<suffix>.txt` when given, else to stdout. The
+  *    first two arguments are taken as `<outDir> <suffix>` only when the
+  *    first is no declared query and the third is one.
   *  - `warm <sfDir>...` — builds every persisted artifact of each
   *    dataset dir (Harness.warm): the offline train-once job.
   *
@@ -38,7 +40,12 @@ object Inspect {
     "plan <sfDir> [<outDir> <suffix>] <query>... | warm <sfDir>..."
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2 && Set("time", "plan", "warm")(args(0)), usage)
+    require(args.headOption match {
+      case Some("time") => args.length >= 4 && args(2).toIntOption.exists(_ >= 1)
+      case Some("plan") => args.length >= 3
+      case Some("warm") => args.length >= 2
+      case _ => false
+    }, usage)
     val spark = Harness.session()
     val ok = args(0) match {
       case "time" => time(spark, args(1), args(2).toInt, args.drop(3).toSeq)
@@ -61,12 +68,12 @@ object Inspect {
 
   private def time(spark: SparkSession, sfDir: String, runs: Int,
                    names: Seq[String]): Boolean = {
-    require(runs >= 1 && names.nonEmpty, usage)
+    val resolved = names.map(n => n -> query(n))
     val counter = new JobCounter
     spark.sparkContext.addSparkListener(counter)
-    Harness.warm(spark, sfDir)
-    names.map { name =>
-      query(name).exists { fn =>
+    val warmed = Harness.warm(spark, sfDir).isEmpty
+    resolved.map { case (name, q) =>
+      q.exists { fn =>
         // one untimed run absorbs this query's own lazy session state
         Harness.timed(fn(spark, sfDir).count())
         counter.start()
@@ -86,17 +93,20 @@ object Inspect {
           f"tasks=${perRun(tasks)} taskTimeSec=${taskSec / runs}%.2f")
         times.size == runs
       }
-    }.forall(identity)
+    }.forall(identity) && warmed
   }
 
   private def plan(spark: SparkSession, sfDir: String, rest: Seq[String]): Boolean = {
+    val declared = SparkEntry.queries.contains _
     val (out, names) =
-      if (rest.headOption.exists(SparkEntry.queries.contains)) (None, rest)
-      else (Some((rest(0), rest(1))), rest.drop(2))
-    Harness.warm(spark, sfDir)
+      if (rest.length >= 3 && !declared(rest(0)) && declared(rest(2)))
+        (Some((rest(0), rest(1))), rest.drop(2))
+      else (None, rest)
+    val resolved = names.map(n => n -> query(n))
+    val warmed = Harness.warm(spark, sfDir).isEmpty
     out.foreach { case (dir, _) => new java.io.File(dir).mkdirs() }
-    names.map { name =>
-      query(name).exists { fn =>
+    resolved.map { case (name, q) =>
+      q.exists { fn =>
         try {
           val df = fn(spark, sfDir)
           val formatted = df.queryExecution.explainString(FormattedMode)
@@ -117,7 +127,7 @@ object Inspect {
           false
         }
       }
-    }.forall(identity)
+    }.forall(identity) && warmed
   }
 
   /** Jobs, stages, tasks and summed task time between start() and stop(). */
